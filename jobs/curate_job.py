@@ -37,6 +37,9 @@ from __future__ import annotations
 import argparse
 import json
 
+# the run ledger: one row per committed curation run
+LEDGER = "run_id string, snapshot_id string, status string, rows_in long, rows_out long, ts double"
+
 
 def curate(
     spark,
@@ -211,7 +214,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from pdf_extractor_spark.operators.lineage import run_key
+    from pdf_extractor_spark.operators.lineage import read_commit_table, run_key
     from pdf_extractor_spark.session import get_spark
 
     spark = get_spark("curate_job")
@@ -223,15 +226,12 @@ def main() -> None:
     # commit lands LAST — a crash at any point replays cleanly; a committed
     # run is skipped outright.
     if args.lineage:
-        try:
-            done = (
-                spark.read.parquet(args.lineage)
-                .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
-                .limit(1)
-                .count()
-            )
-        except Exception:
-            done = 0
+        done = (
+            read_commit_table(spark, args.lineage, LEDGER)
+            .where((F.col("run_id") == run_id) & (F.col("status") == "done"))
+            .limit(1)
+            .count()
+        )
         if done:
             print(json.dumps({"run_id": run_id, "skipped": True, "reason": "already_committed"}))
             spark.stop()
@@ -279,7 +279,7 @@ def main() -> None:
     if args.lineage:
         spark.createDataFrame(
             [(run_id, args.snapshot_id, "done", n_in, n_out, float(time.time()))],
-            "run_id string, snapshot_id string, status string, rows_in long, rows_out long, ts double",
+            LEDGER,
         ).write.mode("append").parquet(args.lineage)
     print(json.dumps(summary))
     spark.stop()

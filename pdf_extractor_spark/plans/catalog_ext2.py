@@ -847,13 +847,7 @@ def q_pipeline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.extract import extract_turns
     from ..operators.order import stable_turn_order
 
-    # native_tier=True: the correctness gate deliberately runs the round-5
-    # two-tier plan so the JVM whole-text expressions stay value-hashed
-    # against the DuckDB oracle every round (production default is the
-    # faster python-only plan — measured in bench.py --tier-split)
-    ext = stable_turn_order(
-        extract_turns(_gate_transcripts(spark, sf_dir), native_tier=True)
-    )
+    ext = stable_turn_order(extract_turns(_gate_transcripts(spark, sf_dir)))
     hits_csv = F.concat_ws(
         ",",
         F.array_sort(

@@ -151,3 +151,23 @@ def test_curate_resume_is_idempotent(tmp_path):
     con = duckdb.connect()
     n = con.execute(f"SELECT count(*) FROM read_parquet('{out}/*.parquet')").fetchone()[0]
     assert n == s1["rows_out"]
+
+
+def test_corrupt_ledger_fails_loudly(tmp_path):
+    """An unreadable ledger must fail the job: reading it as "no run
+    committed" would silently redo the whole curation."""
+    out, lin = tmp_path / "c", tmp_path / "ledger"
+    lin.mkdir()
+    (lin / "part-00000-garbage.snappy.parquet").write_bytes(b"not parquet" * 8)
+    proc = subprocess.run(
+        [
+            sys.executable, str(REPO / "jobs" / "curate_job.py"),
+            "--input", f"{SF}/documents.parquet",
+            "--output", str(out), "--lineage", str(lin),
+        ],
+        capture_output=True, text=True, cwd=str(REPO), timeout=600,
+        env={**os.environ, "PYTHONPATH": str(REPO)},
+    )
+    assert proc.returncode != 0
+    assert "part-00000-garbage" in proc.stderr
+    assert not out.exists()

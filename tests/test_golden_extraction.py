@@ -39,14 +39,11 @@ def oracle_frame(transcripts: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-@pytest.mark.parametrize("native_tier", [False, True])
-def test_spark_matches_oracle_byte_for_byte(spark, transcripts, native_tier):
+def test_spark_matches_oracle_byte_for_byte(spark, transcripts):
     golden = oracle_frame(transcripts)
 
     sdf = spark.createDataFrame(transcripts, schema=TRANSCRIPTS)
-    out = stable_turn_order(
-        extract_turns(sdf, salt_partitions=8, native_tier=native_tier)
-    ).toPandas()
+    out = stable_turn_order(extract_turns(sdf, salt_partitions=8)).toPandas()
 
     assert len(out) == len(golden)
     assert list(out["conv_id"]) == list(golden["conv_id"])

@@ -5,7 +5,8 @@ Scenarios:
   2. immediate re-run is a no-op (nothing pending, no duplicate output);
   3. crash-before-commit (lineage row missing for one file) reprocesses ONLY
      that file and the final output is still exactly-once;
-  4. lineage metrics reconcile with the output (row counts, valid counts).
+  4. lineage metrics reconcile with the output (row counts, valid counts);
+  5. an unreadable lineage table fails the run instead of reading as empty.
 """
 
 from __future__ import annotations
@@ -13,7 +14,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from pdf_extractor_spark.operators.lineage import pending_files, run_incremental
+from pdf_extractor_spark.operators.extract import extract_turns
+from pdf_extractor_spark.operators.lineage import (
+    EXTRACTED_WITH_SRC,
+    SRC_KEY,
+    list_input_files,
+    pending_files,
+    run_incremental,
+    src_key_col,
+)
+from pdf_extractor_spark.rules.oracle import extract_turn
 from pdf_extractor_spark.schema import TRANSCRIPTS
 from pdf_extractor_spark.sources.synth import generate_transcripts
 
@@ -29,6 +39,7 @@ def dirs(spark, tmp_path_factory):
         "output": str(base / "output"),
         "lineage": str(base / "lineage"),
         "n_rows": len(pdf),
+        "pdf": pdf,
     }
 
 
@@ -42,6 +53,35 @@ def test_fresh_run_processes_all(spark, dirs):
     assert out.count() == dirs["n_rows"]
     # exactly one output row per input (conv_id, turn_idx)
     assert out.select("conv_id", "turn_idx").distinct().count() == dirs["n_rows"]
+    # every committed field equals the scalar oracle on the same turn
+    texts = {(r.conv_id, r.turn_idx): r.text for r in dirs["pdf"].itertuples()}
+    for row in out.collect():
+        want = extract_turn(texts[(row.conv_id, row.turn_idx)])
+        got = (
+            row.family,
+            row.extracted_text,
+            [(s.start, s.end, s.kind) for s in row.spans],
+            row.rule_hits,
+            row.n_records,
+            row.valid,
+            row.problem_reason,
+        )
+        assert got == (
+            want.family,
+            want.extracted_text,
+            list(want.spans),
+            want.rule_hits,
+            want.n_records,
+            want.valid,
+            want.problem_reason,
+        ), (row.conv_id, row.turn_idx)
+
+
+def test_job_writes_the_declared_schema(spark, dirs):
+    """The job's extraction is extract_turns carrying src_key through: its
+    schema is the declared EXTRACTED_WITH_SRC."""
+    scan = spark.read.parquet(dirs["input"]).withColumn("src_key", src_key_col())
+    assert extract_turns(scan, passthrough=[SRC_KEY]).schema == EXTRACTED_WITH_SRC
 
 
 def test_rerun_is_noop(spark, dirs):
@@ -210,3 +250,22 @@ def test_auto_salt_fires_on_incremental_whale_after_committed_files(spark, tmp_p
     part_dir = pathlib.Path(whale_key.replace("file://", "")).parent
     n_files = len(list(part_dir.glob("*.parquet")))
     assert n_files > 1, f"auto-salt skipped on incremental whale ({n_files} file)"
+
+
+def test_corrupt_lineage_fails_loudly(spark, dirs, tmp_path):
+    """A lineage directory that cannot be read must fail the run: reading it
+    as "nothing committed" would silently reprocess every input file. An
+    empty directory, by contrast, is a valid empty table."""
+    empty = tmp_path / "lineage_empty"
+    empty.mkdir()
+    n_inputs = list_input_files(spark, dirs["input"]).count()
+    assert pending_files(spark, dirs["input"], str(empty)).count() == n_inputs
+
+    bad = tmp_path / "lineage_bad"
+    bad.mkdir()
+    (bad / "part-00000-garbage.snappy.parquet").write_bytes(b"not parquet" * 8)
+    with pytest.raises(Exception, match="part-00000-garbage"):
+        run_incremental(
+            spark, dirs["input"], str(tmp_path / "out"), str(bad), run_id="r5"
+        )
+    assert not (tmp_path / "out").exists()
