@@ -10,24 +10,33 @@ Stages (each stage's drops land in the manifest with a reason; kept +
 dropped reconciles to the input count — the completeness discipline of the
 extraction pipeline's P5 gate):
 
+  0. null     — NULL-text docs dropped as quality:null_text
   1. pii      — pii_columns: redact emails/phones/SSNs/IPs/URLs in place
                 (training continues on the REDACTED text; nothing dropped)
   2. quality  — Gopher-style filters: word_repetition (top-word share,
                 distinct ratio) + line_repetition_columns (duplicate-line
                 fraction) + minimum length; breaching docs dropped
   3. exact    — sha2 over redacted text, keep min id per hash
+     barrier  — every input doc, tagged: survivors with their text, drops
+                as (stage, reason) only
   4. neardup  — MinHash+LSH pairs -> connected components, keep component
                 canonical (min id)
   5. decontam — 8-gram shingle overlap vs the hash-held-out eval split;
                 contaminated TRAIN docs dropped (eval docs pass through
                 flagged, for downstream eval-set assembly)
+     barrier  — (doc_id, is_eval, stage, reason) of the stage-3 survivors
   6. pack     — pack_sequences_distributed: token-budget bin id + offset
                 per surviving doc (the training-batch layout)
 
 Scale notes: stages 1-2 are narrow maps + the word-count shuffle; stages
 3-5 shuffle on hash/band/shingle keys only (never full text); stage 6 is
-the two-pass range-partitioned cumsum (no per-stratum reducer). Nothing
-collects rows to the driver except the final per-reason summary counts.
+the two-pass range-partitioned cumsum (no per-stratum reducer). Each stage
+runs once per run: the two localCheckpoint barriers hold stages 0-3 and
+4-5, and the curated sink, the manifest sink and the drop census read
+them. The first barrier holds the surviving text (the lineage cut the
+iterative components stage needs); the second holds ids and tags only.
+Nothing collects rows to the driver except the final per-reason summary
+counts, and no stage runs Python code, so a run starts no Python worker.
 
 Prints one JSON summary line.
 """
@@ -56,47 +65,50 @@ def curate(
     curated carries (doc_id, lang, text [redacted], n_tokens, bin_id,
     bin_offset, is_eval) and manifest carries (doc_id, stage, reason).
 
+    Stages 0-5 run inside this call, once each: two eager localCheckpoint
+    barriers hold their results. The first is every input doc tagged
+    (survivors with text, stage 0-3 drops as stage and reason); the second
+    is (doc_id, is_eval, stage, reason) of the stage-3 survivors for
+    near-dup and decontamination. Both returned relations read only those
+    barriers, so writing curated and the manifest re-runs no stage but the
+    packing.
+
     ``stage_probe(name, df) -> df``: optional hook called with the surviving
-    relation at each stage boundary. A provided probe MUST return a
-    materialized (lineage-cut) relation — the ladder then skips its own
-    exact-dedup checkpoint, whose lineage cut the iterative components
-    stage requires (bench.py --curate and --checkpoint-stages both use
-    localCheckpoint probes). Default None keeps the single lazy production
-    plan."""
+    relation at each stage boundary (pii, quality, exact_dedup, near_dedup,
+    decontam, pack). It only attributes cost: the barriers are taken either
+    way. A probe that materializes its input (localCheckpoint) gets that
+    stage's wall; the pii, quality, exact_dedup, near_dedup and pack probes'
+    results feed the next step, the decontam probe's result is unused
+    (curated reads the tag barrier). Default None."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
-    from pdf_extractor_spark.operators.dedup import minhash_lsh_pairs
+    # modules, not functions: minhash_lsh_pairs and near_dup_components are
+    # looked up at call time, so a caller can wrap them to time each apart
+    from pdf_extractor_spark.operators import dedup
+    from pdf_extractor_spark.plans import llm_extras
     from pdf_extractor_spark.plans.catalog_ext import (
         line_repetition_columns,
         pii_columns,
         shingle_decontaminate,
         word_repetition,
     )
-    from pdf_extractor_spark.plans.llm_extras import (
-        near_dup_components,
-        pack_sequences_distributed,
-    )
 
     probe = stage_probe or (lambda _name, df: df)
-    manifests = []
 
     # 0. account for NULL text up front (round-5 ADVICE fix): the quality
     # stage's word-metric join is an inner join against an exploded
     # split(text,' ') — a NULL text yields NO exploded rows, so the doc
     # would vanish with no manifest entry and break kept+dropped==input.
     # Route NULL-text docs into the manifest with an explicit reason.
-    manifests.append(
-        docs.where(F.col("text").isNull()).select(
-            "doc_id", F.lit("quality").alias("stage"), F.lit("null_text").alias("reason")
-        )
-    )
+    drops = [_tag(docs.where(F.col("text").isNull()), "quality", F.lit("null_text"))]
     docs = docs.where(F.col("text").isNotNull())
 
     # 1. PII scrub: redact in place (no drops)
     pii = pii_columns(F.col("text"))
-    docs = docs.withColumn("text", pii["redacted"])
-
-    docs = probe("pii", docs)
+    docs = probe("pii", docs.withColumn("text", pii["redacted"]))
 
     # 2. quality filters (word metrics need a shuffle; line metrics ride it)
     wm = word_repetition(docs)
@@ -114,66 +126,53 @@ def curate(
         )
     )
     feat = feat.withColumn("drop_reason", reason)
-    manifests.append(
-        feat.where(F.col("drop_reason").isNotNull()).select(
-            "doc_id", F.lit("quality").alias("stage"), F.col("drop_reason").alias("reason")
-        )
-    )
-    docs = feat.where(F.col("drop_reason").isNull()).drop(
-        "drop_reason", "rep_n_distinct", "n_lines", "n_dup_lines", "top_word_share_ppm"
-    )
-
-    docs = probe("quality", docs)
+    drops.append(_tag(feat.where(F.col("drop_reason").isNotNull()), "quality", F.col("drop_reason")))
+    docs = probe("quality", feat.where(F.col("drop_reason").isNull()).select("doc_id", "lang", "text"))
 
     # 3. exact dedup: keep min doc_id per content hash
     w_hash = docs.withColumn("chash", F.sha2(F.col("text"), 256))
     keeper = w_hash.groupBy("chash").agg(F.min("doc_id").alias("keep_id"))
     w_hash = w_hash.join(keeper, "chash")
-    manifests.append(
-        w_hash.where(F.col("doc_id") != F.col("keep_id")).select(
-            "doc_id", F.lit("exact_dedup").alias("stage"), F.lit("duplicate_content").alias("reason")
-        )
+    drops.append(
+        _tag(w_hash.where(F.col("doc_id") != F.col("keep_id")), "exact_dedup", F.lit("duplicate_content"))
     )
-    docs = w_hash.where(F.col("doc_id") == F.col("keep_id")).drop("chash", "keep_id")
-    docs = probe("exact_dedup", docs)
-    # the pair derivation + components below iterate over this relation; the
-    # lineage must be cut HERE or every round re-derives the whole ladder.
-    # A materializing probe's barrier already did it (checkpointing twice
-    # would write the full surviving corpus to block storage back-to-back);
-    # the check is structural, not doctrinal: a probe that did NOT leave a
-    # materialized plan (LogicalRDD / InMemoryRelation root) gets the
-    # production checkpoint anyway (round-5 review finding)
-    plan = docs._jdf.queryExecution().optimizedPlan().toString() if stage_probe else ""
-    if stage_probe is None or not any(
-        m in plan for m in ("LogicalRDD", "InMemoryRelation", "ExistingRDD")
-    ):
-        docs = docs.localCheckpoint(eager=True)
+    docs = probe("exact_dedup", w_hash.where(F.col("doc_id") == F.col("keep_id")).drop("chash", "keep_id"))
+
+    # the tagged barrier: every input doc once — survivors with their text,
+    # stage 0-3 drops as (stage, reason) only. Stages 0-3 run here and
+    # nowhere else: the survivors below and the manifest both read it, and
+    # it cuts the lineage the pair derivation and components rounds iterate
+    # over (without the cut every round re-derives the whole ladder)
+    tagged = docs.unionByName(reduce(DataFrame.unionByName, drops), allowMissingColumns=True)
+    tagged = tagged.localCheckpoint(eager=True)
+    survivors = tagged.where(F.col("stage").isNull()).select("doc_id", "lang", "text")
 
     # 4. near-dedup: LSH pairs -> components, keep canonical
-    pairs = minhash_lsh_pairs(docs, threshold=0.9, max_bucket=256)
-    comp = near_dup_components(docs.select("doc_id"), pairs)
-    docs = docs.join(comp, "doc_id")
-    manifests.append(
-        docs.where(~F.col("is_canonical")).select(
-            "doc_id", F.lit("near_dedup").alias("stage"), F.lit("near_duplicate").alias("reason")
-        )
-    )
-    docs = docs.where(F.col("is_canonical")).drop("component", "is_canonical")
-    docs = probe("near_dedup", docs)
+    pairs = dedup.minhash_lsh_pairs(survivors, threshold=0.9, max_bucket=256)
+    comp = llm_extras.near_dup_components(survivors.select("doc_id"), pairs)
+    docs = probe("near_dedup", survivors.join(comp.where(F.col("is_canonical")).select("doc_id"), "doc_id"))
 
     # 5. decontamination vs the hash-held-out eval split
     dec = shingle_decontaminate(docs, F.col("doc_id") % eval_mod == 0)
-    docs = docs.join(dec.select("doc_id", "is_eval", "contaminated"), "doc_id")
-    manifests.append(
-        docs.where(F.col("contaminated")).select(
-            "doc_id", F.lit("decontam").alias("stage"), F.lit("eval_overlap").alias("reason")
-        )
+    probe("decontam", docs.join(dec.where(~F.col("contaminated")).select("doc_id", "is_eval"), "doc_id"))
+
+    # the tag barrier for stages 4-5: ids, eval flags and drop tags of the
+    # stage-3 survivors, no text. Curated and the manifest both read it, so
+    # neither sink re-runs the pairs, components or decontamination
+    tags = _tag(comp.where(~F.col("is_canonical")), "near_dedup", F.lit("near_duplicate")).unionByName(
+        dec.select(
+            "doc_id",
+            "is_eval",
+            F.when(F.col("contaminated"), F.lit("decontam")).alias("stage"),
+            F.when(F.col("contaminated"), F.lit("eval_overlap")).alias("reason"),
+        ),
+        allowMissingColumns=True,
     )
-    docs = docs.where(~F.col("contaminated")).drop("contaminated")
-    docs = probe("decontam", docs)
+    tags = tags.localCheckpoint(eager=True)
+    docs = survivors.join(tags.where(F.col("stage").isNull()).select("doc_id", "is_eval"), "doc_id")
 
     # 6. sequence packing over survivors
-    packed = pack_sequences_distributed(docs.select("doc_id", "lang", "text"), budget=pack_budget)
+    packed = llm_extras.pack_sequences_distributed(docs.select("doc_id", "lang", "text"), budget=pack_budget)
     curated = probe(
         "pack",
         docs.join(packed.drop("lang"), "doc_id").select(
@@ -181,10 +180,15 @@ def curate(
         ),
     )
 
-    manifest = manifests[0]
-    for m in manifests[1:]:
-        manifest = manifest.unionByName(m)
-    return curated, manifest
+    manifest = tagged.select("doc_id", "stage", "reason").unionByName(tags.select("doc_id", "stage", "reason"))
+    return curated, manifest.where(F.col("stage").isNotNull())
+
+
+def _tag(df, stage: str, reason):
+    """Drop rows of one stage: (doc_id, stage, reason), no text."""
+    from pyspark.sql import functions as F
+
+    return df.select("doc_id", F.lit(stage).alias("stage"), reason.alias("reason"))
 
 
 def main() -> None:
@@ -196,25 +200,13 @@ def main() -> None:
     p.add_argument("--snapshot-id", default="local")
     p.add_argument("--eval-mod", type=int, default=50)
     p.add_argument("--pack-budget", type=int, default=2048)
-    p.add_argument(
-        "--checkpoint-stages",
-        action="store_true",
-        help="materialize each stage boundary (localCheckpoint). The two "
-        "sinks (curated + manifest) otherwise share lineage and recompute "
-        "it — measured 1.3-1.9x slower unstaged at 200k docs across two "
-        "windows (bench.py --curate artifacts r5_curate_200k_run{1,2}). "
-        "Default OFF: barriers write the full "
-        "surviving text per stage, the wrong trade once the corpus "
-        "exceeds cluster storage headroom; turn on when recompute is the "
-        "scarcer resource.",
-    )
     args = p.parse_args()
 
     import time
 
     from pyspark.sql import functions as F
 
-    from pdf_extractor_spark.operators.lineage import read_commit_table, run_key
+    from pdf_extractor_spark.operators.lineage import literal_frame, read_commit_table, run_key
     from pdf_extractor_spark.session import get_spark
 
     spark = get_spark("curate_job")
@@ -241,32 +233,19 @@ def main() -> None:
 
     docs = spark.read.parquet(args.input)
     n_in = docs.count()
-    barrier = (
-        (lambda _name, df: df.localCheckpoint(eager=True))
-        if args.checkpoint_stages
-        else None
-    )
-    curated, manifest = curate(
-        spark, docs, eval_mod=args.eval_mod, pack_budget=args.pack_budget,
-        stage_probe=barrier,
-    )
+    curated, manifest = curate(spark, docs, eval_mod=args.eval_mod, pack_budget=args.pack_budget)
     # n_out rides the write via observe() — no re-read of the output
     obs_out = Observation()
     curated = curated.observe(obs_out, F.count(F.lit(1)).alias("n"))
     curated.write.mode("overwrite").parquet(args.output)
     n_out = obs_out.get["n"]
-    # summary must describe the manifest that was WRITTEN, not a second
-    # execution of the (MinHash/components/decontam) lineage that could in
-    # principle diverge: read the parquet back when it exists, otherwise
-    # pin one execution with localCheckpoint before aggregating (r5 ADVICE)
+    # the manifest reads curate()'s two barriers only: writing it and
+    # counting it re-run no stage, so the census describes the written rows
     if args.manifest:
         manifest.write.mode("overwrite").parquet(args.manifest)
-        manifest_final = spark.read.parquet(args.manifest)
-    else:
-        manifest_final = manifest.localCheckpoint(eager=True)
     drops = {
         f"{r['stage']}:{r['reason']}": r["n"]
-        for r in manifest_final.groupBy("stage", "reason").agg(F.count(F.lit(1)).alias("n")).collect()
+        for r in manifest.groupBy("stage", "reason").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     summary = {
         "run_id": run_id,
@@ -277,10 +256,8 @@ def main() -> None:
         "complete": n_out + sum(drops.values()) == n_in,
     }
     if args.lineage:
-        spark.createDataFrame(
-            [(run_id, args.snapshot_id, "done", n_in, n_out, float(time.time()))],
-            LEDGER,
-        ).write.mode("append").parquet(args.lineage)
+        row = (run_id, args.snapshot_id, "done", n_in, n_out, float(time.time()))
+        literal_frame(spark, LEDGER, row).write.mode("append").parquet(args.lineage)
     print(json.dumps(summary))
     spark.stop()
 

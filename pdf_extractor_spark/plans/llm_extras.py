@@ -73,6 +73,7 @@ def near_dup_components(
             ).alias("e")
         )
         .select("e.a", "e.b")
+        .where(F.col("a") != F.col("b"))
         .distinct()
     )
     # every graph node propagates: docs nodes PLUS pair endpoints outside
@@ -91,7 +92,12 @@ def near_dup_components(
         # derivation — e.g. the full MinHash signature pass — per iteration
         .localCheckpoint(eager=True)
     )
-    labels = nodes.select("node", F.col("node").alias("comp"))
+    # round-1 labels come from the checkpointed self-loops, one per node
+    # (self pairs are dropped above): reading them off ``nodes`` would
+    # re-derive the pair relation a second time
+    labels = edges.where(F.col("a") == F.col("b")).select(
+        F.col("a").alias("node"), F.col("a").alias("comp")
+    )
     rounds = 0
     while True:
         rounds += 1

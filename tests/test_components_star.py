@@ -145,3 +145,23 @@ def test_components_foreign_min_still_yields_a_canonical_doc(spark):
     for fn in (near_dup_components, near_dup_components_star):
         rows = {(r.doc_id, r.component, r.is_canonical) for r in fn(docs, pairs).collect()}
         assert rows == {(2, 0, True), (3, 0, False)}, (fn.__name__, rows)
+
+
+def test_propagation_evaluates_the_pair_relation_once(spark):
+    """The pair relation is the expensive input (at curation scale, the
+    whole MinHash pass): near_dup_components must evaluate it once, for the
+    checkpointed edges, and seed its round-1 labels from their self-loops
+    instead of deriving the nodes from the pairs a second time. A Python
+    UDF over d1 counts the pair rows evaluated."""
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def touch(x):
+        evaluated.add(1)
+        return x
+
+    pairs = _pairs(spark, [(0, 1), (1, 2), (5, 6)]).select(
+        F.udf(touch, "long")("d1").alias("d1"), "d2"
+    )
+    got = {(r.doc_id, r.component) for r in near_dup_components(_docs(spark, 8), pairs).collect()}
+    assert got == {(0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 5), (6, 5), (7, 7)}
+    assert evaluated.value == 3

@@ -171,3 +171,29 @@ def test_corrupt_ledger_fails_loudly(tmp_path):
     assert proc.returncode != 0
     assert "part-00000-garbage" in proc.stderr
     assert not out.exists()
+
+
+def test_manifest_write_reruns_no_stage(spark, tmp_path):
+    """curate() runs stages 0-5 once, into two barriers; curated and the
+    manifest both read them. Once curated is written, writing the manifest
+    is a scan of the two barriers: at most two Spark jobs, where a manifest
+    that re-derived the ladder (pairs, components rounds, decontamination)
+    ran dozens."""
+    from pyspark.sql import functions as F
+
+    sys.path.insert(0, str(REPO / "jobs"))
+    from curate_job import curate
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").where(F.col("doc_id") < 200)
+    curated, manifest = curate(spark, docs, pack_budget=256)
+    curated.write.parquet(str(tmp_path / "curated"))
+    sc = spark.sparkContext
+    sc.setJobGroup("curate-manifest", "manifest write")
+    try:
+        manifest.write.parquet(str(tmp_path / "manifest"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("curate-manifest")) <= 2
+    n_kept = spark.read.parquet(str(tmp_path / "curated")).count()
+    n_dropped = spark.read.parquet(str(tmp_path / "manifest")).count()
+    assert n_dropped > 0 and n_kept + n_dropped == docs.count()

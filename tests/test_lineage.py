@@ -12,6 +12,7 @@ Scenarios:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 import pytest
 
 from pdf_extractor_spark.operators.extract import extract_turns
@@ -19,12 +20,14 @@ from pdf_extractor_spark.operators.lineage import (
     EXTRACTED_WITH_SRC,
     SRC_KEY,
     list_input_files,
+    literal_frame,
     pending_files,
+    read_commit_table,
     run_incremental,
     src_key_col,
 )
 from pdf_extractor_spark.rules.oracle import extract_turn
-from pdf_extractor_spark.schema import TRANSCRIPTS
+from pdf_extractor_spark.schema import LINEAGE, TRANSCRIPTS
 from pdf_extractor_spark.sources.synth import generate_transcripts
 
 
@@ -269,3 +272,35 @@ def test_corrupt_lineage_fails_loudly(spark, dirs, tmp_path):
             spark, dirs["input"], str(tmp_path / "out"), str(bad), run_id="r5"
         )
     assert not (tmp_path / "out").exists()
+
+
+@pytest.mark.parametrize(
+    "schema", [LINEAGE, "run_id string, rows_in long, ts double"], ids=["struct", "ddl"]
+)
+def test_missing_commit_table_reads_empty_without_a_python_worker(spark, tmp_path, capsys, schema):
+    """A commit table that does not exist yet reads as zero rows with the
+    declared column names and types, built on the JVM: a Python-RDD scan
+    (ExistingRDD) would start a Python worker, ~1.3 s on a fresh context,
+    on every first run of a job."""
+    df = read_commit_table(spark, str(tmp_path / "absent"), schema)
+    want = schema if not isinstance(schema, str) else T.StructType.fromDDL(schema)
+    assert [(f.name, f.dataType) for f in df.schema] == [(f.name, f.dataType) for f in want]
+    assert df.count() == 0
+    capsys.readouterr()
+    df.explain()
+    plan = capsys.readouterr().out
+    assert "Range" in plan and "ExistingRDD" not in plan
+
+
+def test_literal_row_is_built_on_the_jvm(spark, capsys):
+    """The curate ledger's commit row: one row with the declared types, and
+    no Python-RDD scan (createDataFrame over local rows would start a
+    Python worker to write it)."""
+    df = literal_frame(spark, "run_id string, rows_in long, ts double", ("r1", 5, 1.5))
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        ("run_id", T.StringType()), ("rows_in", T.LongType()), ("ts", T.DoubleType())
+    ]
+    assert [tuple(r) for r in df.collect()] == [("r1", 5, 1.5)]
+    capsys.readouterr()
+    df.explain()
+    assert "ExistingRDD" not in capsys.readouterr().out
