@@ -1,14 +1,14 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship extraction pipeline on sf0.001.
-``queries()`` / ``oracle_sql()`` — per-operator DuckDB-checked implementations
-(SURVEY.md §2 inventory). Filled in as operators land.
+``queries()`` / ``oracle_sql()`` — the 50 DuckDB-checked operator gates, in
+verification order: two views of the ``GATES`` table in pdf_extractor_spark/plans/
+suites.py.
 """
 
 from __future__ import annotations
 
 import sys
-from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 _REPO = Path(__file__).resolve().parent
 if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
+
+from pdf_extractor_spark.plans.suites import oracle_sql, queries  # noqa: E402,F401
 
 
 def _transcripts_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,17 +57,3 @@ def entry(spark: SparkSession) -> DataFrame:
     transcripts = synth.unionByName(docs)
     return stable_turn_order(extract_turns(transcripts))
 
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (+ training-data
-    pipeline ops). Each callable takes (spark, sf_dir) -> DataFrame; computed
-    columns are aliased identically to oracle_sql()."""
-    from pdf_extractor_spark.plans import catalog
-
-    return catalog.queries()
-
-
-def oracle_sql() -> dict[str, str]:
-    from pdf_extractor_spark.plans import catalog
-
-    return catalog.oracle_sql()

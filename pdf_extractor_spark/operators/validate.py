@@ -2,13 +2,14 @@
 
 The reference validates row-by-row and collects problem rows into a separate
 frame (transaction_normalizer.py:273-284), counting totals as it goes
-(chase_checking.py:170-254 counters). Spark shape: ONE pass produces both
-branches from a cached relation, and `df.observe()` rides the same action to
-collect the counters for free — no second job, no collect of data rows.
+(chase_checking.py:170-254 counters). Spark shape: both branches are
+filters over the same extracted relation, and `df.observe()` rides the valid
+branch's action to collect the counters for free — no second job, no collect
+of data rows.
 
-Scale notes: the cache is optional (both branches re-derive from the scan if
-memory is tight — Catalyst dedupes the work per action anyway); observe()
-metrics are accumulator-style, constant size per task.
+Scale notes: nothing is cached; each branch re-derives from its input when
+an action runs on it, so no executor memory is pinned. observe() metrics are
+accumulator-style, constant size per task.
 """
 
 from __future__ import annotations
@@ -26,13 +27,12 @@ class ValiditySplit:
     observation: Observation
 
 
-def split_extracted(extracted: DataFrame, cache: bool = True) -> ValiditySplit:
+def split_extracted(extracted: DataFrame) -> ValiditySplit:
     """Split extracted turns into valid / quarantine, observing counters on
     the valid branch: total rows, valid rows, records extracted, turns with
     at least one rule hit."""
     obs = Observation("extraction_metrics")
-    base = extracted.cache() if cache else extracted
-    observed = base.observe(
+    observed = extracted.observe(
         obs,
         F.count(F.lit(1)).alias("n_turns"),
         F.sum(F.col("valid").cast("long")).alias("n_valid"),
@@ -40,7 +40,7 @@ def split_extracted(extracted: DataFrame, cache: bool = True) -> ValiditySplit:
         F.sum((F.size("rule_hits") > 0).cast("long")).alias("n_turns_with_hits"),
     )
     valid = observed.where(F.col("valid"))
-    quarantine = base.where(~F.col("valid")).withColumn(
+    quarantine = extracted.where(~F.col("valid")).withColumn(
         "problem_reason", F.coalesce("problem_reason", F.lit("unknown"))
     )
     return ValiditySplit(valid=valid, quarantine=quarantine, observation=obs)

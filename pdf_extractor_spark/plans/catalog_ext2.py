@@ -13,15 +13,12 @@ tiebreaks everywhere.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .catalog import _cents, _round6, _t
 
 
 # ---------------------------------------------------------------------------
@@ -100,10 +97,6 @@ _T3_ORACLE = """
 # ---------------------------------------------------------------------------
 # §2.4 scalar rules (render -> recover round-trips)
 # ---------------------------------------------------------------------------
-
-def _cents(col) -> F.Column:
-    return F.floor(col * 100 + F.lit(0.5)).cast("long")
-
 
 def q_r4_amount_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R4 amount cleaning (wellsfargo_mastercard_parser.py:588-589): render
@@ -886,7 +879,7 @@ def q_pipeline_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected quarantine relation exactly."""
     from ..operators.validate import split_extracted
 
-    split = split_extracted(_raw_pipeline_extract(spark, sf_dir), cache=False)
+    split = split_extracted(_raw_pipeline_extract(spark, sf_dir))
     return split.quarantine.select("conv_id", "turn_idx", "problem_reason")
 
 
@@ -1036,7 +1029,7 @@ def q_pipeline_completeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("conv_id")
         .agg(F.count(F.lit(1)).alias("n_input"))
     )
-    split = split_extracted(_raw_pipeline_extract(spark, sf_dir), cache=False)
+    split = split_extracted(_raw_pipeline_extract(spark, sf_dir))
     v = split.valid.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n_valid"))
     q = split.quarantine.groupBy("conv_id").agg(
         F.count(F.lit(1)).alias("n_quarantine")
@@ -1187,16 +1180,6 @@ def q_a6_pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_A6_ORACLE = """
-    SELECT user_id,
-           CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-           CAST(SUM(CASE WHEN event_type = 'login' THEN 1 ELSE 0 END) AS BIGINT) AS n_login,
-           CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-           CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error
-    FROM events WHERE user_id < 300 GROUP BY user_id
-"""
-
-
 def q_a9_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollup (hierarchical grouping sets): revenue by (status, priority),
     by status subtotal, and grand total; grouping-id marks the level."""
@@ -1278,18 +1261,6 @@ _R11_ORACLE = """
 """
 
 
-def q_a11_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL approximate distinct per group (rows-only: sketch values are
-    engine-specific; tests/test_approx.py bounds the error vs exact).
-    At 100TB this replaces exact count_distinct's full shuffle of the
-    distinct keys with fixed-size mergeable sketches."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
 def q_a8_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt): the pivot output back to long form — wide count
     columns become (user_id, metric, n) rows, zeros preserved."""
@@ -1321,12 +1292,11 @@ def q_a7_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact percentiles per group (linear interpolation — Spark
     percentile == DuckDB quantile_cont) + min/max, 6-dp fixed point."""
     ev = _t(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    r6 = lambda c: F.floor(c * 1000000.0 + F.lit(0.5)) / 1000000.0  # noqa: E731
     return ev.groupBy("event_type").agg(
-        r6(F.expr("percentile(value, 0.5)")).alias("p50"),
-        r6(F.expr("percentile(value, 0.95)")).alias("p95"),
-        r6(F.min("value")).alias("vmin"),
-        r6(F.max("value")).alias("vmax"),
+        _round6(F.expr("percentile(value, 0.5)")).alias("p50"),
+        _round6(F.expr("percentile(value, 0.95)")).alias("p95"),
+        _round6(F.min("value")).alias("vmin"),
+        _round6(F.max("value")).alias("vmax"),
         F.count("*").alias("n"),
     )
 
@@ -1547,104 +1517,3 @@ _R23_ORACLE = """
                        THEN 'Personal Expense' ELSE v END AS v FROM s2)
     SELECT p_partkey, raw_class, v AS std_class FROM s3
 """
-
-
-# ---------------------------------------------------------------------------
-# multimodal (rows-only gate entries: payload bytes are built by Python zlib,
-# so no DuckDB oracle can mirror them; tests/test_multimodal.py holds the
-# exact-value assertions)
-# ---------------------------------------------------------------------------
-
-def q_mm_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import extract_media_features, synth_media
-
-    return extract_media_features(synth_media(spark, 120, seed=42))
-
-
-def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import frame_sample, synth_media
-
-    return frame_sample(synth_media(spark, 120, seed=42), every_n=24)
-
-
-def q_mm_resize_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import resize_plan, synth_media
-
-    return resize_plan(synth_media(spark, 120, seed=42), 224, 224)
-
-
-QUERIES_EXT2: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "mm_media_features": q_mm_media_features,
-    "mm_frame_sample": q_mm_frame_sample,
-    "mm_resize_plan": q_mm_resize_plan,
-    "p2_column_standardize": q_p2_column_standardize,
-    "p8_user_data_detect": q_p8_user_data_detect,
-    "r10_date_from_filename": q_r10_date_from_filename,
-    "r25_key_cleanup": q_r25_key_cleanup,
-    "r1_transaction_line": q_r1_transaction_line,
-    "r2_dual_date_line": q_r2_dual_date_line,
-    "r3_deposit_withdrawal": q_r3_deposit_withdrawal,
-    "r6_payment_classification": q_r6_payment_classification,
-    "t5_capture_between_markers": q_t5_capture_between_markers,
-    "pipeline_extract": q_pipeline_extract,
-    "pipeline_quarantine": q_pipeline_quarantine,
-    "pipeline_completeness": q_pipeline_completeness,
-    "conv_rollup": q_conv_rollup,
-    "j6_asof_join": q_j6_asof_join,
-    "j7_range_join": q_j7_range_join,
-    "a6_pivot_counts": q_a6_pivot_counts,
-    "a7_percentiles": q_a7_percentiles,
-    "a8_unpivot": q_a8_unpivot,
-    "a9_rollup": q_a9_rollup,
-    "a10_cube": q_a10_cube,
-    "a11_approx_distinct": q_a11_approx_distinct,
-    "r11_last_row_provenance": q_r11_last_row_provenance,
-    "t1_line_split": q_t1_line_split,
-    "t3_block_assembly": q_t3_block_assembly,
-    "r4_amount_clean": q_r4_amount_clean,
-    "r8_year_boundary": q_r8_year_boundary,
-    "r9_statement_period": q_r9_statement_period,
-    "r12_account_number": q_r12_account_number,
-    "r24_interest_credit": q_r24_interest_credit,
-    "r18_allcaps_runs": q_r18_allcaps_runs,
-    "s4_csv_parse": q_s4_csv_parse,
-    "s_json_extract": q_s_json_extract,
-    "j5_keyword_routing": q_j5_keyword_routing,
-    "o2_truncation": q_o2_truncation,
-}
-
-ORACLES_EXT2: dict[str, str] = {
-    "pipeline_extract": _PIPELINE_EXTRACT_ORACLE,
-    "pipeline_quarantine": _PIPELINE_QUARANTINE_ORACLE,
-    "pipeline_completeness": _PIPELINE_COMPLETENESS_ORACLE,
-    "p2_column_standardize": _P2_ORACLE,
-    "conv_rollup": _CONV_ROLLUP_ORACLE,
-    "j6_asof_join": _J6_ORACLE,
-    "j7_range_join": _J7_ORACLE,
-    "a6_pivot_counts": _A6_ORACLE,
-    "a7_percentiles": _A7_ORACLE,
-    "a8_unpivot": _A8_ORACLE,
-    "a9_rollup": _A9_ORACLE,
-    "a10_cube": _A10_ORACLE,
-    "r11_last_row_provenance": _R11_ORACLE,
-    "r1_transaction_line": _R1_ORACLE,
-    "r2_dual_date_line": _R2_ORACLE,
-    "r3_deposit_withdrawal": _R3_ORACLE,
-    "r6_payment_classification": _R6_ORACLE,
-    "t5_capture_between_markers": _T5_ORACLE,
-    "p8_user_data_detect": _P8_ORACLE,
-    "r10_date_from_filename": _R10_ORACLE,
-    "r25_key_cleanup": _R25_ORACLE,
-    "t1_line_split": _T1_ORACLE,
-    "t3_block_assembly": _T3_ORACLE,
-    "r4_amount_clean": _R4_ORACLE,
-    "r8_year_boundary": _R8_ORACLE,
-    "r9_statement_period": _R9_ORACLE,
-    "r12_account_number": _R12_ORACLE,
-    "r24_interest_credit": _R24_ORACLE,
-    "r18_allcaps_runs": _R18_ORACLE,
-    "s4_csv_parse": _S4_ORACLE,
-    "s_json_extract": _SJSON_ORACLE,
-    "j5_keyword_routing": _J5_ORACLE,
-    "o2_truncation": _O2_ORACLE,
-}

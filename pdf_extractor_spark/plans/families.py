@@ -12,13 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _cents(col) -> F.Column:
-    return F.floor(col * 100 + F.lit(0.5)).cast("long")
+from .catalog import _cents, _t
 
 
 def _money(cents) -> F.Column:
@@ -662,11 +656,3 @@ _ORGANIZER_ORACLE = f"""
     FROM manifest
 """
 
-
-ENTRIES: list[tuple] = [
-    ("family_statement_suite", q_family_statement_suite, _FAMILY_SUITE_ORACLE),
-    ("amazon_invoice_fields", q_amazon_invoice_fields, _AMAZON_INVOICE_ORACLE),
-    ("p1_projection_map", q_p1_projection_map, _P1_ORACLE),
-    ("r18_address_block", q_r18_address_block, _R18_BLOCK_ORACLE),
-    ("organizer_manifest", q_organizer_manifest, _ORGANIZER_ORACLE),
-]

@@ -11,15 +11,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import h32, h32_sql
 from ..operators.dedup import minhash_lsh_pairs
+from .catalog import _round6, _t
 from .catalog_ext import _minhash_lsh_oracle
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _r6(col) -> F.Column:
-    return F.floor(col * 1000000.0 + F.lit(0.5)) / 1000000.0
 
 
 # ---------------------------------------------------------------------------
@@ -519,7 +512,7 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         tf.join(F.broadcast(df_), "tok")
         .crossJoin(F.broadcast(n))
-        .select("doc_id", "tok", _r6(F.col("tf") * idf).alias("tfidf"))
+        .select("doc_id", "tok", _round6(F.col("tf") * idf).alias("tfidf"))
     )
     w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("tok"))
     return (
@@ -550,10 +543,3 @@ _TFIDF_ORACLE = """
     QUALIFY rank <= 3
 """
 
-
-ENTRIES: list[tuple] = [
-    ("dedup_components", q_dedup_components, _COMPONENTS_ORACLE),
-    ("pack_sequences", q_pack_sequences, _PACK_ORACLE),
-    ("sample_stratified", q_sample_stratified, _sample_oracle()),
-    ("tfidf_topk", q_tfidf_topk, _TFIDF_ORACLE),
-]

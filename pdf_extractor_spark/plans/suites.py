@@ -1,54 +1,78 @@
-"""Merged gate suites + the ordered driver registry.
+"""The gate table: every operator gate checked against its DuckDB oracle.
 
-Round-1 lesson (VERDICT.md): the driver verifies only the FIRST ~50 entries of
-``queries()`` in insertion order — 32 of 82 entries (most SURVEY §2 rule
-operators) never reached the DuckDB oracle. This module fixes that two ways:
+``GATES`` is the ordered list of ``(name, plan, oracle_sql)`` rows the
+verifier checks: each plan takes ``(spark, sf_dir)`` and returns a
+DataFrame, and the oracle is the DuckDB SQL whose result must hash-match it.
+``queries()`` and ``oracle_sql()`` are two views of that one table.
 
-1. **Suites**: same-keyed scalar rules over one base table are merged into a
-   single multi-column gate entry. Both tiers compose the SAME already-green
-   pieces — the Spark side joins the constituent query outputs on their key
-   (or tag-unions same-shaped outputs), and the oracle side composes the
-   constituent SQL strings with identical CTE + JOIN USING / UNION ALL
-   structure. No rule logic is duplicated or re-derived here; the per-operator
-   implementations in catalog/catalog_ext/catalog_ext2 remain the production
-   path (single-scan, no join) and are what bench.py measures.
+Order matters. The verifier checks only the FIRST ~50 entries of
+``queries()`` in insertion order (round-1 lesson: 32 of 82 entries once
+never reached the oracle), so the table holds exactly 50 rows: the flagship
+pipeline first, then the SURVEY §2 operator gates, the LLM-pipeline ops,
+TPC-H parity, and the beyond-reference extras last
+(``tests/test_registry_order.py`` pins it).
 
-2. **Ordering**: REGISTRY below is the explicit driver order — SURVEY §2
-   operators and the LLM-pipeline ops first, beyond-reference extras last, so
-   everything the judge grades sits inside the verification window.
+Most per-operator plans and oracles live in catalog/catalog_ext/
+catalog_ext2/families/llm_extras, and those single-scan plans are what
+bench.py measures. Same-keyed scalar rules over one base table are packed
+into one multi-column gate so the whole inventory fits the window; a suite
+is declared once, as pieces ``(plan, oracle_sql, cols)``:
 
-The gate-suite joins are 1:1 on the base-table key and run at sf0.01 only;
+- ``join_gate(key, *pieces)`` joins the pieces 1:1 on ``key``;
+- ``union_gate(*(tag, plan, oracle_sql, cols))`` tag-unions same-shaped
+  pieces under a ``variant`` column.
+
+``cols`` is one list of SQL projections (``"signed_amount AS
+r3_signed_amount"``): the Spark side applies it with ``F.expr``, the oracle
+puts it in its SELECT list, so both tiers compose the same already-green
+pieces with the same renames and casts. The suite joins run at sf0.01 only;
 they are verification packaging, not a production plan shape.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import catalog, catalog_ext, catalog_ext2
+from . import catalog, catalog_ext, catalog_ext2, families, llm_extras
+from .catalog import _t
+
+Plan = Callable[[SparkSession, str], DataFrame]
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+def join_gate(key: str, *pieces: tuple[Plan, str, list[str]]) -> tuple[Plan, str]:
+    """(plan, oracle) for ``pieces`` joined 1:1 on ``key``; each piece's
+    ``cols`` carries the key."""
+
+    def plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+        dfs = [q(spark, sf_dir).select(*map(F.expr, cols)) for q, _, cols in pieces]
+        return reduce(lambda a, b: a.join(b, key), dfs)
+
+    ctes = ",\n".join(
+        f"p{i} AS (SELECT {', '.join(cols)} FROM ({sql}))"
+        for i, (_, sql, cols) in enumerate(pieces)
+    )
+    joins = " ".join(f"JOIN p{i} USING ({key})" for i in range(1, len(pieces)))
+    return plan, f"WITH {ctes}\nSELECT * FROM p0 {joins}"
 
 
-def _compose_join(key: str, pieces: list[tuple[str, str]], cols: list[str]) -> str:
-    """CTE-compose oracle SELECTs joined 1:1 on `key` (same shape as the
-    Spark-side DataFrame join composition)."""
-    ctes = ",\n".join(f"{a} AS ({s})" for a, s in pieces)
-    joins = " ".join(f"JOIN {a} USING ({key})" for a, _ in pieces[1:])
-    return f"WITH {ctes}\nSELECT {', '.join(cols)}\nFROM {pieces[0][0]} {joins}"
+def union_gate(*pieces: tuple[str, Plan, str, list[str]]) -> tuple[Plan, str]:
+    """(plan, oracle) for ``pieces`` tag-unioned under a ``variant`` column."""
 
+    def plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+        dfs = [
+            q(spark, sf_dir).select(F.lit(tag).alias("variant"), *map(F.expr, cols))
+            for tag, q, _, cols in pieces
+        ]
+        return reduce(DataFrame.unionByName, dfs)
 
-def _compose_union(pieces: list[tuple[str, str, str]]) -> str:
-    """Tag-union oracle SELECTs: pieces are (tag, sql, projected-cols)."""
-    parts = [
-        f"SELECT '{tag}' AS variant, {cols} FROM ({sql})" for tag, sql, cols in pieces
-    ]
-    return "\nUNION ALL\n".join(parts)
+    return plan, "\nUNION ALL\n".join(
+        f"SELECT '{tag}' AS variant, {', '.join(cols)} FROM ({sql})"
+        for tag, _, sql, cols in pieces
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -100,483 +124,6 @@ _WINDOW_SUITE_ORACLE = """
            wcum AS (PARTITION BY user_id ORDER BY ts, event_id
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 """
-
-
-# ---------------------------------------------------------------------------
-# per-key scalar-rule suites (join composition of the green pieces)
-# ---------------------------------------------------------------------------
-
-def q_r1_r2_line_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1 transaction-line match + R2 dual-date/ref/amount match (SURVEY
-    §2.4) — the rendered-line round-trips, joined 1:1 on o_orderkey."""
-    r1 = catalog_ext2.q_r1_transaction_line(spark, sf_dir)
-    r2 = (
-        catalog_ext2.q_r2_dual_date_line(spark, sf_dir)
-        .withColumnRenamed("trans_date", "r2_trans_date")
-        .withColumnRenamed("post_date", "r2_post_date")
-        .withColumnRenamed("ref", "r2_ref")
-        .withColumnRenamed("description", "r2_description")
-        .withColumnRenamed("amount_str", "r2_amount_str")
-    )
-    return r1.join(r2, "o_orderkey")
-
-
-_R1_R2_ORACLE = _compose_join(
-    "o_orderkey",
-    [("r1", catalog_ext2._R1_ORACLE), ("r2", catalog_ext2._R2_ORACLE)],
-    [
-        "o_orderkey",
-        "r1.txn_mmdd",
-        "r1.description",
-        "r1.amount",
-        "r2.trans_date AS r2_trans_date",
-        "r2.post_date AS r2_post_date",
-        "r2.ref AS r2_ref",
-        "r2.description AS r2_description",
-        "r2.amount_str AS r2_amount_str",
-    ],
-)
-
-
-def q_event_rules_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R3 deposit/withdrawal match + R5 sign normalization + R6 payment
-    classification + P5 validity/quarantine + S-json extraction (SURVEY §2.3/
-    §2.4) — all per-event_id rules, joined 1:1."""
-    r3 = (
-        catalog_ext2.q_r3_deposit_withdrawal(spark, sf_dir)
-        .withColumnRenamed("signed_amount", "r3_signed_amount")
-    )
-    r5 = catalog.q_r5_sign_normalization(spark, sf_dir).withColumnRenamed(
-        "signed_amount", "r5_signed_amount"
-    )
-    r6 = catalog_ext2.q_r6_payment_classification(spark, sf_dir)
-    p5 = catalog.q_p5_validity_quarantine(spark, sf_dir)
-    js = catalog_ext2.q_s_json_extract(spark, sf_dir).select(
-        "event_id", F.coalesce("k", F.lit(-1).cast("long")).alias("k")
-    )
-    return r3.join(r5, "event_id").join(r6, "event_id").join(p5, "event_id").join(
-        js, "event_id"
-    )
-
-
-_EVENT_RULES_ORACLE = _compose_join(
-    "event_id",
-    [
-        ("r3", catalog_ext2._R3_ORACLE),
-        ("r5", catalog._ORACLES["r5_sign_normalization"]),
-        ("r6", catalog_ext2._R6_ORACLE),
-        ("p5", catalog._ORACLES["p5_validity_quarantine"]),
-        (
-            "js",
-            f"SELECT event_id, COALESCE(k, CAST(-1 AS BIGINT)) AS k"
-            f" FROM ({catalog_ext2._SJSON_ORACLE})",
-        ),
-    ],
-    [
-        "event_id",
-        "r3.txn_mmdd",
-        "r3.description",
-        "r3.signed_amount AS r3_signed_amount",
-        "r5.signed_amount AS r5_signed_amount",
-        "r6.ttype",
-        "p5.valid",
-        "p5.problem_reason",
-        "js.k",
-    ],
-)
-
-
-def q_order_date_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R7 date ladder + R8 year boundary + R9 statement period + R10 date
-    from filename + R24 interest-credit rule (SURVEY §2.4) per o_orderkey."""
-    r7 = catalog.q_r7_date_ladder(spark, sf_dir)
-    r8 = catalog_ext2.q_r8_year_boundary(spark, sf_dir).withColumnRenamed(
-        "txn_date", "r8_txn_date"
-    )
-    r9 = catalog_ext2.q_r9_statement_period(spark, sf_dir)
-    r10 = catalog_ext2.q_r10_date_from_filename(spark, sf_dir)
-    r24 = catalog_ext2.q_r24_interest_credit(spark, sf_dir).withColumnRenamed(
-        "txn_date", "r24_txn_date"
-    )
-    return (
-        r7.join(r8, "o_orderkey")
-        .join(r9, "o_orderkey")
-        .join(r10, "o_orderkey")
-        .join(r24, "o_orderkey")
-    )
-
-
-_ORDER_DATE_ORACLE = _compose_join(
-    "o_orderkey",
-    [
-        ("r7", catalog._ORACLES["r7_date_ladder"]),
-        ("r8", catalog_ext2._R8_ORACLE),
-        ("r9", catalog_ext2._R9_ORACLE),
-        ("r10", catalog_ext2._R10_ORACLE),
-        ("r24", catalog_ext2._R24_ORACLE),
-    ],
-    [
-        "o_orderkey",
-        "r7.iso_date",
-        "r8.txn_date AS r8_txn_date",
-        "r9.period_start",
-        "r9.period_end",
-        "r10.file_date",
-        "r24.txn_date AS r24_txn_date",
-    ],
-)
-
-
-def q_part_rules_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R4 amount cleaning + R18 ALL-CAPS run capture + R23 classification
-    standardization + R25 key cleanup + J5 keyword routing (SURVEY
-    §2.4/§2.5) per p_partkey."""
-    r4 = catalog_ext2.q_r4_amount_clean(spark, sf_dir)
-    r18 = catalog_ext2.q_r18_allcaps_runs(spark, sf_dir)
-    r23 = catalog_ext2.q_r23_classification(spark, sf_dir)
-    r25 = catalog_ext2.q_r25_key_cleanup(spark, sf_dir)
-    j5 = catalog_ext2.q_j5_keyword_routing(spark, sf_dir)
-    return (
-        r4.join(r18, "p_partkey")
-        .join(r23, "p_partkey")
-        .join(r25, "p_partkey")
-        .join(j5, "p_partkey")
-    )
-
-
-_PART_RULES_ORACLE = _compose_join(
-    "p_partkey",
-    [
-        ("r4", catalog_ext2._R4_ORACLE),
-        ("r18", catalog_ext2._R18_ORACLE),
-        ("r23", catalog_ext2._R23_ORACLE),
-        ("r25", catalog_ext2._R25_ORACLE),
-        ("j5", catalog_ext2._J5_ORACLE),
-    ],
-    [
-        "p_partkey",
-        "r4.raw_amount",
-        "r4.amount",
-        "r18.n_runs",
-        "r18.first_run",
-        "r23.raw_class",
-        "r23.std_class",
-        "r25.clean_key",
-        "r25.is_garbage",
-        "j5.route",
-    ],
-)
-
-
-def q_customer_rules_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2 column standardization + P8 user-data detection + R12 account
-    number + S4 CSV parse (SURVEY §2.1/§2.3/§2.4) per c_custkey."""
-    p2 = catalog_ext2.q_p2_column_standardize(spark, sf_dir)
-    p8 = catalog_ext2.q_p8_user_data_detect(spark, sf_dir)
-    r12 = catalog_ext2.q_r12_account_number(spark, sf_dir)
-    s4 = (
-        catalog_ext2.q_s4_csv_parse(spark, sf_dir)
-        .withColumnRenamed("custkey", "c_custkey")
-        .withColumnRenamed("name", "csv_name")
-        .withColumnRenamed("balance", "csv_balance")
-        .withColumnRenamed("segment", "csv_segment")
-    )
-    return p2.join(p8, "c_custkey").join(r12, "c_custkey").join(s4, "c_custkey")
-
-
-_CUSTOMER_RULES_ORACLE = _compose_join(
-    "c_custkey",
-    [
-        ("p2", catalog_ext2._P2_ORACLE),
-        ("p8", catalog_ext2._P8_ORACLE),
-        ("r12", catalog_ext2._R12_ORACLE),
-        (
-            "s4",
-            f"SELECT custkey AS c_custkey, name AS csv_name, balance AS csv_balance,"
-            f" segment AS csv_segment FROM ({catalog_ext2._S4_ORACLE})",
-        ),
-    ],
-    [
-        "c_custkey",
-        "p2.std_name",
-        "p8.has_user_data",
-        "r12.account_number",
-        "s4.csv_name",
-        "s4.csv_balance",
-        "s4.csv_segment",
-    ],
-)
-
-
-def q_doc_rules_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R13 description cleanup + R14 token count + O2 truncation + J4/S5
-    first-match dispatch + T5 capture-between-markers (SURVEY §2.2/§2.4/
-    §2.5/§2.8) per doc_id. T5's doc_id<300 bound is inherited from its
-    constituent query, so the join keeps its rows (left semantics on the
-    bounded side would drop columns; inner keeps the verified subset)."""
-    r13 = catalog.q_r13_description_cleanup(spark, sf_dir)
-    r14 = catalog.q_r14_token_count(spark, sf_dir)
-    o2 = catalog_ext2.q_o2_truncation(spark, sf_dir)
-    j4 = catalog.q_j4_first_match_dispatch(spark, sf_dir)
-    t5 = catalog_ext2.q_t5_capture_between_markers(spark, sf_dir)
-    return (
-        r13.join(r14, "doc_id").join(o2, "doc_id").join(j4, "doc_id").join(t5, "doc_id")
-    )
-
-
-_DOC_RULES_ORACLE = _compose_join(
-    "doc_id",
-    [
-        ("r13", catalog._ORACLES["r13_description_cleanup"]),
-        ("r14", catalog._ORACLES["r14_token_count"]),
-        ("o2", catalog_ext2._O2_ORACLE),
-        ("j4", catalog._ORACLES["j4_first_match_dispatch"]),
-        ("t5", catalog_ext2._T5_ORACLE),
-    ],
-    [
-        "doc_id",
-        "r13.clean_text",
-        "r14.n_tokens",
-        "r14.n_chars_computed",
-        "o2.first3",
-        "o2.prefix40",
-        "o2.last2",
-        "j4.doctype",
-        "t5.captured",
-    ],
-)
-
-
-def q_p3_p6_keyword_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3 keyword exclude filter + P6 boilerplate suppression (SURVEY §2.3):
-    both predicates applied (conjunction), both column sets carried."""
-    p3 = catalog.q_p3_keyword_filter(spark, sf_dir)
-    p6 = catalog.q_p6_boilerplate_suppression(spark, sf_dir)
-    return p3.join(p6, "doc_id")
-
-
-_P3_P6_ORACLE = _compose_join(
-    "doc_id",
-    [
-        ("p3", catalog._ORACLES["p3_keyword_filter"]),
-        ("p6", catalog._ORACLES["p6_boilerplate_suppression"]),
-    ],
-    ["doc_id", "p3.source", "p3.n_chars", "p6.lang"],
-)
-
-
-def q_text_features_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text-analysis ladder in one gate entry: stopword ratio + quality score
-    (catalog) + language ID + ARI readability + rolling fingerprint + BPE-ish
-    token count + PII scrub + repetition signals (catalog_ext), joined 1:1
-    on doc_id. The PII and repetition tiers (round 4) carry injected
-    exemplars — synthetic docs have no PII and no newlines, so both oracles
-    inject byte-identically (the _BAD_TURNS discipline)."""
-    a = catalog.q_text_stopword_ratio(spark, sf_dir)
-    b = catalog.q_text_quality_score(spark, sf_dir)
-    c = catalog_ext.q_text_langid(spark, sf_dir)
-    d = catalog_ext.q_text_readability(spark, sf_dir)
-    e = catalog_ext.q_text_fingerprint(spark, sf_dir)
-    f = catalog_ext.q_text_bpe_token_count(spark, sf_dir)
-    g = catalog_ext.q_text_pii_scrub(spark, sf_dir)
-    h = catalog_ext.q_text_repetition(spark, sf_dir)
-    i = catalog_ext.q_text_decontaminate(spark, sf_dir)
-    return (
-        a.join(b, "doc_id").join(c, "doc_id").join(d, "doc_id").join(e, "doc_id").join(f, "doc_id")
-        .join(g, "doc_id").join(h, "doc_id").join(i, "doc_id")
-    )
-
-
-_TEXT_FEATURES_ORACLE = _compose_join(
-    "doc_id",
-    [
-        ("sw", catalog._ORACLES["text_stopword_ratio"]),
-        ("qs", catalog._ORACLES["text_quality_score"]),
-        ("li", catalog_ext.ORACLES_EXT["text_langid"]),
-        ("rd", catalog_ext.ORACLES_EXT["text_readability"]),
-        ("fp", catalog_ext.ORACLES_EXT["text_fingerprint"]),
-        ("bp", catalog_ext.ORACLES_EXT["text_bpe_token_count"]),
-        ("pi", catalog_ext.ORACLES_EXT["text_pii_scrub"]),
-        ("rp", catalog_ext.ORACLES_EXT["text_repetition"]),
-        ("dc", catalog_ext.ORACLES_EXT["text_decontaminate"]),
-    ],
-    [
-        "doc_id",
-        "sw.stopword_ratio",
-        "qs.quality_score",
-        "li.lang_guess",
-        "li.n_en",
-        "li.n_sql",
-        "li.n_stream",
-        "rd.ari",
-        "rd.n_words",
-        "rd.n_sentences",
-        "fp.fingerprint",
-        "bp.n_bpe_tokens",
-        "pi.n_emails",
-        "pi.n_phones",
-        "pi.n_ssns",
-        "pi.n_ips",
-        "pi.n_urls",
-        "pi.url_domain",
-        "pi.redacted_tail",
-        "rp.rep_n_words",
-        "rp.rep_n_distinct",
-        "rp.top_word_share_ppm",
-        "rp.n_lines",
-        "rp.n_dup_lines",
-        "rp.n_bullet_lines",
-        "rp.n_ellipsis_lines",
-        "dc.decon_n_shingles",
-        "dc.decon_n_contam",
-        "dc.is_eval",
-        "dc.contaminated",
-    ],
-)
-
-
-# ---------------------------------------------------------------------------
-# tag-union suites (same-shaped outputs)
-# ---------------------------------------------------------------------------
-
-def q_a1_a2_counts_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 union-all consolidation + A2 per-source counts (SURVEY §2.6),
-    melted to (variant, k1, k2, n)."""
-    a1 = catalog.q_a1_union_consolidation(spark, sf_dir).select(
-        F.lit("union_consolidation").alias("variant"),
-        F.col("source").alias("k1"),
-        F.col("o_orderstatus").alias("k2"),
-        F.col("n_rows").alias("n"),
-    )
-    a2 = catalog.q_a2_counts_per_source(spark, sf_dir).select(
-        F.lit("counts_per_source").alias("variant"),
-        F.col("source").alias("k1"),
-        F.col("lang").alias("k2"),
-        F.col("n_docs").alias("n"),
-    )
-    return a1.unionByName(a2)
-
-
-_A1_A2_ORACLE = _compose_union(
-    [
-        (
-            "union_consolidation",
-            catalog._ORACLES["a1_union_consolidation"],
-            "source AS k1, o_orderstatus AS k2, n_rows AS n",
-        ),
-        (
-            "counts_per_source",
-            catalog._ORACLES["a2_counts_per_source"],
-            "source AS k1, lang AS k2, n_docs AS n",
-        ),
-    ]
-)
-
-
-def q_dedup_jaccard_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-token + char-trigram Jaccard near-dup pairs, tagged."""
-    uni = catalog.q_dedup_unigram_jaccard(spark, sf_dir).select(
-        F.lit("unigram").alias("variant"), "d1", "d2", "jaccard"
-    )
-    tri = catalog_ext.q_dedup_trigram_jaccard(spark, sf_dir).select(
-        F.lit("trigram").alias("variant"), "d1", "d2", "jaccard"
-    )
-    return uni.unionByName(tri)
-
-
-_DEDUP_JACCARD_ORACLE = _compose_union(
-    [
-        ("unigram", catalog._ORACLES["dedup_unigram_jaccard"], "d1, d2, jaccard"),
-        ("trigram", catalog_ext.ORACLES_EXT["dedup_trigram_jaccard"], "d1, d2, jaccard"),
-    ]
-)
-
-
-def q_dedup_minhash_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs: bounded gate config AND the full-corpus
-    production config with the mega-bucket cap engaged, tagged."""
-    b = catalog_ext.q_dedup_minhash_lsh(spark, sf_dir).select(
-        F.lit("bounded").alias("variant"), "d1", "d2", "jaccard"
-    )
-    fc = catalog_ext.q_dedup_minhash_full_capped(spark, sf_dir).select(
-        F.lit("full_capped").alias("variant"), "d1", "d2", "jaccard"
-    )
-    return b.unionByName(fc)
-
-
-_DEDUP_MINHASH_ORACLE = _compose_union(
-    [
-        ("bounded", catalog_ext.ORACLES_EXT["dedup_minhash_lsh"], "d1, d2, jaccard"),
-        (
-            "full_capped",
-            catalog_ext.ORACLES_EXT["dedup_minhash_full_capped"],
-            "d1, d2, jaccard",
-        ),
-    ]
-)
-
-
-def q_dedup_simhash_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash sketches (per-doc) + hamming-verified near-dup pairs, melted
-    to a common (variant, k1, k2, v) long schema."""
-    # -1 sentinel, not NULL: a nullable BIGINT column round-trips through
-    # pandas as float64 and value-hashes differently (r01 dtype lesson)
-    sk = catalog_ext.q_dedup_simhash(spark, sf_dir).select(
-        F.lit("sketch").alias("variant"),
-        F.col("doc_id").cast("long").alias("k1"),
-        F.lit(-1).cast("long").alias("k2"),
-        F.col("simhash").cast("long").alias("v"),
-    )
-    pr = catalog_ext.q_dedup_simhash_pairs(spark, sf_dir).select(
-        F.lit("pair").alias("variant"),
-        F.col("d1").cast("long").alias("k1"),
-        F.col("d2").cast("long").alias("k2"),
-        F.col("hamming").cast("long").alias("v"),
-    )
-    return sk.unionByName(pr)
-
-
-_DEDUP_SIMHASH_ORACLE = _compose_union(
-    [
-        (
-            "sketch",
-            catalog_ext.ORACLES_EXT["dedup_simhash"],
-            "CAST(doc_id AS BIGINT) AS k1, CAST(-1 AS BIGINT) AS k2, simhash AS v",
-        ),
-        (
-            "pair",
-            catalog_ext.ORACLES_EXT["dedup_simhash_pairs"],
-            "CAST(d1 AS BIGINT) AS k1, CAST(d2 AS BIGINT) AS k2, hamming AS v",
-        ),
-    ]
-)
-
-
-def q_sim_topk_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-k: brute-force cosine baseline + IVF probe variant, tagged."""
-    br = catalog.q_sim_bruteforce_topk(spark, sf_dir).select(
-        F.lit("brute").alias("variant"), "query_id", "neighbor_id", "cosine", "rank"
-    )
-    iv = catalog_ext.q_sim_ivf_topk(spark, sf_dir).select(
-        F.lit("ivf").alias("variant"), "query_id", "neighbor_id", "cosine", "rank"
-    )
-    return br.unionByName(iv)
-
-
-_SIM_TOPK_ORACLE = _compose_union(
-    [
-        (
-            "brute",
-            catalog._ORACLES["sim_bruteforce_topk"],
-            "query_id, neighbor_id, cosine, rank",
-        ),
-        (
-            "ivf",
-            catalog_ext.ORACLES_EXT["sim_ivf_topk"],
-            "query_id, neighbor_id, cosine, rank",
-        ),
-    ]
-)
 
 
 # ---------------------------------------------------------------------------
@@ -786,93 +333,18 @@ _MM_PLAN_ORACLE = """
 
 
 # ---------------------------------------------------------------------------
-# beyond-reference grouping-set merges
+# beyond-reference agg extras: ALL of them (percentiles / pivot-unpivot /
+# rollup-cube / HLL tolerance / set ops) melted into one suite so the whole
+# table fits the ~50-entry verify window (r2 VERDICT #8)
 # ---------------------------------------------------------------------------
 
-def q_a6_a8_pivot_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot then unpivot round-trip (beyond-reference): wide per-user event
-    counts melted back to long form — one entry exercises both operators."""
-    return catalog_ext2.q_a8_unpivot(spark, sf_dir)
-
-
-def q_a9_a10_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rollup + cube grouping sets, melted to a common tagged schema."""
-    r = catalog_ext2.q_a9_rollup(spark, sf_dir).select(
-        F.lit("rollup").alias("variant"),
-        F.col("status").alias("k1"),
-        F.col("priority").alias("k2"),
-        F.col("revenue").alias("revenue"),
-        F.col("n_orders").alias("n"),
-        "gid",
-    )
-    c = catalog_ext2.q_a10_cube(spark, sf_dir).select(
-        F.lit("cube").alias("variant"),
-        F.col("etype").alias("k1"),
-        F.col("bucket").alias("k2"),
-        F.lit(-1.0).cast("double").alias("revenue"),
-        F.col("n"),
-        "gid",
-    )
-    return r.unionByName(c)
-
-
-_A9_A10_ORACLE = _compose_union(
-    [
-        (
-            "rollup",
-            catalog_ext2._A9_ORACLE,
-            "status AS k1, priority AS k2, revenue, n_orders AS n, gid",
-        ),
-        (
-            "cube",
-            catalog_ext2._A10_ORACLE,
-            "etype AS k1, bucket AS k2, CAST(-1.0 AS DOUBLE) AS revenue, n, gid",
-        ),
-    ]
+# rollup + cube grouping sets, melted to a common tagged schema
+_rollup_cube, _ROLLUP_CUBE_ORACLE = union_gate(
+    ("rollup", catalog_ext2.q_a9_rollup, catalog_ext2._A9_ORACLE,
+     ["status AS k1", "priority AS k2", "revenue", "n_orders AS n", "gid"]),
+    ("cube", catalog_ext2.q_a10_cube, catalog_ext2._A10_ORACLE,
+     ["etype AS k1", "bucket AS k2", "CAST(-1.0 AS DOUBLE) AS revenue", "n", "gid"]),
 )
-
-
-# ---------------------------------------------------------------------------
-# round-3 window repack: TPC-H q5+q6 melted to one entry, and ALL
-# beyond-reference agg extras (percentiles / pivot-unpivot / rollup-cube /
-# HLL tolerance / set ops) melted into one suite so the whole registry fits
-# the driver's ~50-entry verify window (r2 VERDICT #8)
-# ---------------------------------------------------------------------------
-
-def q_tpch_q5_q6_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 multi-join revenue + Q6 filter-aggregate forecast, melted to
-    (variant, k, v, n). Production plans unchanged (bench measures them
-    individually); this is verification packaging."""
-    q5 = catalog.q_tpch_q5_local_supplier(spark, sf_dir).select(
-        F.lit("q5").alias("variant"),
-        F.col("n_name").alias("k"),
-        F.col("revenue").alias("v"),
-        F.lit(-1).cast("long").alias("n"),
-    )
-    q6 = catalog.q_tpch_q6_forecast(spark, sf_dir).select(
-        F.lit("q6").alias("variant"),
-        F.lit("forecast").alias("k"),
-        F.col("revenue").alias("v"),
-        F.col("n_rows").alias("n"),
-    )
-    return q5.unionByName(q6)
-
-
-_TPCH_Q5_Q6_ORACLE = _compose_union(
-    [
-        (
-            "q5",
-            catalog._ORACLES["tpch_q5_local_supplier"],
-            "n_name AS k, revenue AS v, CAST(-1 AS BIGINT) AS n",
-        ),
-        (
-            "q6",
-            catalog._ORACLES["tpch_q6_forecast"],
-            "'forecast' AS k, revenue AS v, n_rows AS n",
-        ),
-    ]
-)
-
 
 def q_a11_hll_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11 with a CHECKABLE contract (replaces the rows-only HLL entry): per
@@ -909,14 +381,14 @@ def q_agg_extras_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "'n', CAST(n AS DOUBLE)) AS (metric, v)"
         ),
     )
-    a8 = q_a6_a8_pivot_unpivot(spark, sf_dir).select(
+    a8 = catalog_ext2.q_a8_unpivot(spark, sf_dir).select(
         F.lit("a8").alias("variant"),
         F.col("user_id").cast("string").alias("k1"),
         F.lit("").alias("k2"),
         F.col("metric"),
         F.col("n").cast("double").alias("v"),
     )
-    rc = q_a9_a10_rollup_cube(spark, sf_dir)
+    rc = _rollup_cube(spark, sf_dir)
     rc_rows = rc.select(
         "variant",
         F.coalesce(F.col("k1"), F.lit("<null>")).alias("k1"),
@@ -958,7 +430,7 @@ def _agg_extras_oracle() -> str:
     return f"""
     WITH a7 AS ({catalog_ext2._A7_ORACLE}),
     a8 AS ({catalog_ext2._A8_ORACLE}),
-    rc AS ({_A9_A10_ORACLE}),
+    rc AS ({_ROLLUP_CUBE_ORACLE}),
     so AS ({catalog_ext.ORACLES_EXT["set_intersect_except"]})
     {a7_parts}
     UNION ALL
@@ -974,137 +446,233 @@ def _agg_extras_oracle() -> str:
 
 
 # ---------------------------------------------------------------------------
-# the ordered driver registry
+# the ordered gate table
 # ---------------------------------------------------------------------------
 
-def registry() -> tuple[
-    dict[str, Callable[[SparkSession, str], DataFrame]], dict[str, str]
-]:
-    """(queries, oracles) in DRIVER ORDER: flagship pipeline first, then the
-    SURVEY §2 operator gates, then the LLM-pipeline ops, then TPC-H parity,
-    then beyond-reference extras. Rows-only entries (no oracle) are noted."""
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    o: dict[str, str] = {}
+_O, _OX = catalog._ORACLES, catalog_ext.ORACLES_EXT
 
-    def add(name, fn, sql=None):
-        q[name] = fn
-        if sql is not None:
-            o[name] = sql
-
-    # -- flagship extraction pipeline — FULLY ORACLED as of round 4 (r3
-    # VERDICT ask #1): the gate input's domain (single-fragment [a-z ]
-    # documents + constant injected exemplars) makes every scalar column —
-    # extracted_text bytes included — recomputable in DuckDB SQL, with a
-    # loud UNMODELED sentinel for anything outside that domain.
-    # quarantine + completeness remain ORACLED as before.
-    add(
-        "pipeline_extract",
-        catalog_ext2.q_pipeline_extract,
-        catalog_ext2._PIPELINE_EXTRACT_ORACLE,
-    )
-    add(
-        "pipeline_quarantine",
-        catalog_ext2.q_pipeline_quarantine,
-        catalog_ext2._PIPELINE_QUARANTINE_ORACLE,
-    )
-    add(
-        "pipeline_completeness",
-        catalog_ext2.q_pipeline_completeness,
-        catalog_ext2._PIPELINE_COMPLETENESS_ORACLE,
-    )
-    add("conv_rollup", catalog_ext2.q_conv_rollup, catalog_ext2._CONV_ROLLUP_ORACLE)
-
+GATES: list[tuple[str, Plan, str]] = [
+    # -- flagship extraction pipeline, fully value-oracled: the gate input's
+    # domain (single-fragment [a-z ] documents + constant injected
+    # exemplars) makes every scalar column, extracted_text bytes included,
+    # recomputable in DuckDB SQL, with a loud UNMODELED sentinel for
+    # anything outside that domain
+    ("pipeline_extract", catalog_ext2.q_pipeline_extract,
+     catalog_ext2._PIPELINE_EXTRACT_ORACLE),
+    ("pipeline_quarantine", catalog_ext2.q_pipeline_quarantine,
+     catalog_ext2._PIPELINE_QUARANTINE_ORACLE),
+    ("pipeline_completeness", catalog_ext2.q_pipeline_completeness,
+     catalog_ext2._PIPELINE_COMPLETENESS_ORACLE),
+    ("conv_rollup", catalog_ext2.q_conv_rollup, catalog_ext2._CONV_ROLLUP_ORACLE),
     # -- SURVEY §2 operator gates
-    add("w2_w3_w4_w6_window_suite", q_window_suite, _WINDOW_SUITE_ORACLE)
-    add("t1_line_split", catalog_ext2.q_t1_line_split, catalog_ext2._T1_ORACLE)
-    add("t3_block_assembly", catalog_ext2.q_t3_block_assembly, catalog_ext2._T3_ORACLE)
-    add("r1_r2_line_extraction", q_r1_r2_line_extraction, _R1_R2_ORACLE)
-    add("r3_r5_r6_p5_event_rules", q_event_rules_suite, _EVENT_RULES_ORACLE)
-    add("r7_r8_r9_r10_r24_date_rules", q_order_date_rules, _ORDER_DATE_ORACLE)
-    add("r4_r18_r23_r25_j5_part_rules", q_part_rules_suite, _PART_RULES_ORACLE)
-    add("p2_p8_r12_s4_customer_rules", q_customer_rules_suite, _CUSTOMER_RULES_ORACLE)
-    add("r13_r14_o2_j4_t5_doc_rules", q_doc_rules_suite, _DOC_RULES_ORACLE)
-    add("p3_p6_keyword_filters", q_p3_p6_keyword_filters, _P3_P6_ORACLE)
-    add(
-        "p4_amount_threshold",
-        catalog.q_p4_amount_threshold,
-        catalog._ORACLES["p4_amount_threshold"],
-    )
-    add(
-        "r11_last_row_provenance",
-        catalog_ext2.q_r11_last_row_provenance,
-        catalog_ext2._R11_ORACLE,
-    )
-    add("r19_row_hash", catalog.q_r19_row_hash, catalog._ORACLES["r19_row_hash"])
-    add(
-        "r21_sequential_id",
-        catalog.q_r21_sequential_id,
-        catalog._ORACLES["r21_sequential_id"],
-    )
-    add("j1_exact_join", catalog.q_j1_exact_join, catalog._ORACLES["j1_exact_join"])
-    add(
-        "j2_fuzzy_topk",
-        catalog_ext.q_j2_fuzzy_topk,
-        catalog_ext.ORACLES_EXT["j2_fuzzy_topk"],
-    )
-    add("j6_asof_join", catalog_ext2.q_j6_asof_join, catalog_ext2._J6_ORACLE)
-    add("j7_range_join", catalog_ext2.q_j7_range_join, catalog_ext2._J7_ORACLE)
-    add("o3_top1_per_key", catalog.q_o3_top1_per_key, catalog._ORACLES["o3_top1_per_key"])
-    add("a1_a2_counts_suite", q_a1_a2_counts_suite, _A1_A2_ORACLE)
-    add("a3_group_totals", catalog.q_a3_group_totals, catalog._ORACLES["a3_group_totals"])
-    add("a4_minmax_dates", catalog.q_a4_minmax_dates, catalog._ORACLES["a4_minmax_dates"])
-    add("a5_dedup_exact", catalog.q_a5_dedup_exact, catalog._ORACLES["a5_dedup_exact"])
-    add(
-        "st1_resume_antijoin",
-        catalog.q_st1_resume_antijoin,
-        catalog._ORACLES["st1_resume_antijoin"],
-    )
-
+    ("w2_w3_w4_w6_window_suite", q_window_suite, _WINDOW_SUITE_ORACLE),
+    ("t1_line_split", catalog_ext2.q_t1_line_split, catalog_ext2._T1_ORACLE),
+    ("t3_block_assembly", catalog_ext2.q_t3_block_assembly, catalog_ext2._T3_ORACLE),
+    ("r1_r2_line_extraction", *join_gate(
+        "o_orderkey",
+        (catalog_ext2.q_r1_transaction_line, catalog_ext2._R1_ORACLE,
+         ["o_orderkey", "txn_mmdd", "description", "amount"]),
+        (catalog_ext2.q_r2_dual_date_line, catalog_ext2._R2_ORACLE,
+         ["o_orderkey", "trans_date AS r2_trans_date", "post_date AS r2_post_date",
+          "ref AS r2_ref", "description AS r2_description",
+          "amount_str AS r2_amount_str"]),
+    )),
+    ("r3_r5_r6_p5_event_rules", *join_gate(
+        "event_id",
+        (catalog_ext2.q_r3_deposit_withdrawal, catalog_ext2._R3_ORACLE,
+         ["event_id", "txn_mmdd", "description", "signed_amount AS r3_signed_amount"]),
+        (catalog.q_r5_sign_normalization, _O["r5_sign_normalization"],
+         ["event_id", "signed_amount AS r5_signed_amount"]),
+        (catalog_ext2.q_r6_payment_classification, catalog_ext2._R6_ORACLE,
+         ["event_id", "ttype"]),
+        (catalog.q_p5_validity_quarantine, _O["p5_validity_quarantine"],
+         ["event_id", "valid", "problem_reason"]),
+        (catalog_ext2.q_s_json_extract, catalog_ext2._SJSON_ORACLE,
+         ["event_id", "COALESCE(k, CAST(-1 AS BIGINT)) AS k"]),
+    )),
+    ("r7_r8_r9_r10_r24_date_rules", *join_gate(
+        "o_orderkey",
+        (catalog.q_r7_date_ladder, _O["r7_date_ladder"], ["o_orderkey", "iso_date"]),
+        (catalog_ext2.q_r8_year_boundary, catalog_ext2._R8_ORACLE,
+         ["o_orderkey", "txn_date AS r8_txn_date"]),
+        (catalog_ext2.q_r9_statement_period, catalog_ext2._R9_ORACLE,
+         ["o_orderkey", "period_start", "period_end"]),
+        (catalog_ext2.q_r10_date_from_filename, catalog_ext2._R10_ORACLE,
+         ["o_orderkey", "file_date"]),
+        (catalog_ext2.q_r24_interest_credit, catalog_ext2._R24_ORACLE,
+         ["o_orderkey", "txn_date AS r24_txn_date"]),
+    )),
+    ("r4_r18_r23_r25_j5_part_rules", *join_gate(
+        "p_partkey",
+        (catalog_ext2.q_r4_amount_clean, catalog_ext2._R4_ORACLE,
+         ["p_partkey", "raw_amount", "amount"]),
+        (catalog_ext2.q_r18_allcaps_runs, catalog_ext2._R18_ORACLE,
+         ["p_partkey", "n_runs", "first_run"]),
+        (catalog_ext2.q_r23_classification, catalog_ext2._R23_ORACLE,
+         ["p_partkey", "raw_class", "std_class"]),
+        (catalog_ext2.q_r25_key_cleanup, catalog_ext2._R25_ORACLE,
+         ["p_partkey", "clean_key", "is_garbage"]),
+        (catalog_ext2.q_j5_keyword_routing, catalog_ext2._J5_ORACLE,
+         ["p_partkey", "route"]),
+    )),
+    ("p2_p8_r12_s4_customer_rules", *join_gate(
+        "c_custkey",
+        (catalog_ext2.q_p2_column_standardize, catalog_ext2._P2_ORACLE,
+         ["c_custkey", "std_name"]),
+        (catalog_ext2.q_p8_user_data_detect, catalog_ext2._P8_ORACLE,
+         ["c_custkey", "has_user_data"]),
+        (catalog_ext2.q_r12_account_number, catalog_ext2._R12_ORACLE,
+         ["c_custkey", "account_number"]),
+        (catalog_ext2.q_s4_csv_parse, catalog_ext2._S4_ORACLE,
+         ["custkey AS c_custkey", "name AS csv_name", "balance AS csv_balance",
+          "segment AS csv_segment"]),
+    )),
+    # T5's doc_id < 300 bound comes from its piece: the inner join keeps the
+    # verified subset
+    ("r13_r14_o2_j4_t5_doc_rules", *join_gate(
+        "doc_id",
+        (catalog.q_r13_description_cleanup, _O["r13_description_cleanup"],
+         ["doc_id", "clean_text"]),
+        (catalog.q_r14_token_count, _O["r14_token_count"],
+         ["doc_id", "n_tokens", "n_chars_computed"]),
+        (catalog_ext2.q_o2_truncation, catalog_ext2._O2_ORACLE,
+         ["doc_id", "first3", "prefix40", "last2"]),
+        (catalog.q_j4_first_match_dispatch, _O["j4_first_match_dispatch"],
+         ["doc_id", "doctype"]),
+        (catalog_ext2.q_t5_capture_between_markers, catalog_ext2._T5_ORACLE,
+         ["doc_id", "captured"]),
+    )),
+    # both predicates applied (conjunction), both column sets carried
+    ("p3_p6_keyword_filters", *join_gate(
+        "doc_id",
+        (catalog.q_p3_keyword_filter, _O["p3_keyword_filter"],
+         ["doc_id", "source", "n_chars"]),
+        (catalog.q_p6_boilerplate_suppression, _O["p6_boilerplate_suppression"],
+         ["doc_id", "lang"]),
+    )),
+    ("p4_amount_threshold", catalog.q_p4_amount_threshold, _O["p4_amount_threshold"]),
+    ("r11_last_row_provenance", catalog_ext2.q_r11_last_row_provenance,
+     catalog_ext2._R11_ORACLE),
+    ("r19_row_hash", catalog.q_r19_row_hash, _O["r19_row_hash"]),
+    ("r21_sequential_id", catalog.q_r21_sequential_id, _O["r21_sequential_id"]),
+    ("j1_exact_join", catalog.q_j1_exact_join, _O["j1_exact_join"]),
+    ("j2_fuzzy_topk", catalog_ext.q_j2_fuzzy_topk, _OX["j2_fuzzy_topk"]),
+    ("j6_asof_join", catalog_ext2.q_j6_asof_join, catalog_ext2._J6_ORACLE),
+    ("j7_range_join", catalog_ext2.q_j7_range_join, catalog_ext2._J7_ORACLE),
+    ("o3_top1_per_key", catalog.q_o3_top1_per_key, _O["o3_top1_per_key"]),
+    ("a1_a2_counts_suite", *union_gate(
+        ("union_consolidation", catalog.q_a1_union_consolidation,
+         _O["a1_union_consolidation"], ["source AS k1", "o_orderstatus AS k2", "n_rows AS n"]),
+        ("counts_per_source", catalog.q_a2_counts_per_source,
+         _O["a2_counts_per_source"], ["source AS k1", "lang AS k2", "n_docs AS n"]),
+    )),
+    ("a3_group_totals", catalog.q_a3_group_totals, _O["a3_group_totals"]),
+    ("a4_minmax_dates", catalog.q_a4_minmax_dates, _O["a4_minmax_dates"]),
+    ("a5_dedup_exact", catalog.q_a5_dedup_exact, _O["a5_dedup_exact"]),
+    ("st1_resume_antijoin", catalog.q_st1_resume_antijoin, _O["st1_resume_antijoin"]),
     # -- round-2 parity families (apple card / bofa visa / amazon invoice /
-    # P1 normalize pipeline / R18 composition / organizer ladder). Import
-    # fails LOUDLY: a broken families module silently shrinking the verify
-    # window would be invisible to every other test
-    from . import families
-
-    for name, fn, sql in families.ENTRIES:
-        add(name, fn, sql)
-
-    # -- LLM-training-data pipeline ops
-    add("text_features_suite", q_text_features_suite, _TEXT_FEATURES_ORACLE)
-    add("dedup_jaccard_suite", q_dedup_jaccard_suite, _DEDUP_JACCARD_ORACLE)
-    add("dedup_minhash_suite", q_dedup_minhash_suite, _DEDUP_MINHASH_ORACLE)
-    add("dedup_simhash_suite", q_dedup_simhash_suite, _DEDUP_SIMHASH_ORACLE)
-    add(
-        "dedup_embedding_cosine",
-        catalog_ext.q_dedup_embedding_cosine,
-        catalog_ext.ORACLES_EXT["dedup_embedding_cosine"],
-    )
-    add("sim_topk_suite", q_sim_topk_suite, _SIM_TOPK_ORACLE)
-    add("mm_media_features", q_mm_media_features, _mm_media_oracle())
-    add("mm_plan_suite", q_mm_plan_suite, _MM_PLAN_ORACLE)
-
+    # P1 normalize pipeline / R18 composition / organizer ladder)
+    ("family_statement_suite", families.q_family_statement_suite,
+     families._FAMILY_SUITE_ORACLE),
+    ("amazon_invoice_fields", families.q_amazon_invoice_fields,
+     families._AMAZON_INVOICE_ORACLE),
+    ("p1_projection_map", families.q_p1_projection_map, families._P1_ORACLE),
+    ("r18_address_block", families.q_r18_address_block, families._R18_BLOCK_ORACLE),
+    ("organizer_manifest", families.q_organizer_manifest, families._ORGANIZER_ORACLE),
+    # -- LLM-training-data pipeline ops. The PII and repetition pieces carry
+    # injected exemplars: synthetic docs have no PII and no newlines, so
+    # both tiers inject byte-identically (the _INJECTED_TURNS discipline)
+    ("text_features_suite", *join_gate(
+        "doc_id",
+        (catalog.q_text_stopword_ratio, _O["text_stopword_ratio"],
+         ["doc_id", "stopword_ratio"]),
+        (catalog.q_text_quality_score, _O["text_quality_score"],
+         ["doc_id", "quality_score"]),
+        (catalog_ext.q_text_langid, _OX["text_langid"],
+         ["doc_id", "lang_guess", "n_en", "n_sql", "n_stream"]),
+        (catalog_ext.q_text_readability, _OX["text_readability"],
+         ["doc_id", "ari", "n_words", "n_sentences"]),
+        (catalog_ext.q_text_fingerprint, _OX["text_fingerprint"],
+         ["doc_id", "fingerprint"]),
+        (catalog_ext.q_text_bpe_token_count, _OX["text_bpe_token_count"],
+         ["doc_id", "n_bpe_tokens"]),
+        (catalog_ext.q_text_pii_scrub, _OX["text_pii_scrub"],
+         ["doc_id", "n_emails", "n_phones", "n_ssns", "n_ips", "n_urls", "url_domain",
+          "redacted_tail"]),
+        (catalog_ext.q_text_repetition, _OX["text_repetition"],
+         ["doc_id", "rep_n_words", "rep_n_distinct", "top_word_share_ppm", "n_lines",
+          "n_dup_lines", "n_bullet_lines", "n_ellipsis_lines"]),
+        (catalog_ext.q_text_decontaminate, _OX["text_decontaminate"],
+         ["doc_id", "decon_n_shingles", "decon_n_contam", "is_eval", "contaminated"]),
+    )),
+    ("dedup_jaccard_suite", *union_gate(
+        ("unigram", catalog.q_dedup_unigram_jaccard, _O["dedup_unigram_jaccard"],
+         ["d1", "d2", "jaccard"]),
+        ("trigram", catalog_ext.q_dedup_trigram_jaccard, _OX["dedup_trigram_jaccard"],
+         ["d1", "d2", "jaccard"]),
+    )),
+    # the bounded gate config AND the full-corpus production config with the
+    # mega-bucket cap engaged
+    ("dedup_minhash_suite", *union_gate(
+        ("bounded", catalog_ext.q_dedup_minhash_lsh, _OX["dedup_minhash_lsh"],
+         ["d1", "d2", "jaccard"]),
+        ("full_capped", catalog_ext.q_dedup_minhash_full_capped,
+         _OX["dedup_minhash_full_capped"], ["d1", "d2", "jaccard"]),
+    )),
+    # per-doc sketches + hamming-verified pairs in one (k1, k2, v) long
+    # schema; -1 sentinel, not NULL: a nullable BIGINT column round-trips
+    # through pandas as float64 and value-hashes differently (r01 lesson)
+    ("dedup_simhash_suite", *union_gate(
+        ("sketch", catalog_ext.q_dedup_simhash, _OX["dedup_simhash"],
+         ["CAST(doc_id AS BIGINT) AS k1", "CAST(-1 AS BIGINT) AS k2",
+          "CAST(simhash AS BIGINT) AS v"]),
+        ("pair", catalog_ext.q_dedup_simhash_pairs, _OX["dedup_simhash_pairs"],
+         ["CAST(d1 AS BIGINT) AS k1", "CAST(d2 AS BIGINT) AS k2",
+          "CAST(hamming AS BIGINT) AS v"]),
+    )),
+    ("dedup_embedding_cosine", catalog_ext.q_dedup_embedding_cosine,
+     _OX["dedup_embedding_cosine"]),
+    # ANN top-k: brute-force cosine baseline + IVF probe variant
+    ("sim_topk_suite", *union_gate(
+        ("brute", catalog.q_sim_bruteforce_topk, _O["sim_bruteforce_topk"],
+         ["query_id", "neighbor_id", "cosine", "rank"]),
+        ("ivf", catalog_ext.q_sim_ivf_topk, _OX["sim_ivf_topk"],
+         ["query_id", "neighbor_id", "cosine", "rank"]),
+    )),
+    ("mm_media_features", q_mm_media_features, _mm_media_oracle()),
+    ("mm_plan_suite", q_mm_plan_suite, _MM_PLAN_ORACLE),
     # -- round-2 training-data pipeline extras (components / packing /
     # stratified sampling / tf-idf)
-    from . import llm_extras
-
-    for name, fn, sql in llm_extras.ENTRIES:
-        add(name, fn, sql)
-
+    ("dedup_components", llm_extras.q_dedup_components, llm_extras._COMPONENTS_ORACLE),
+    ("pack_sequences", llm_extras.q_pack_sequences, llm_extras._PACK_ORACLE),
+    ("sample_stratified", llm_extras.q_sample_stratified, llm_extras._sample_oracle()),
+    ("tfidf_topk", llm_extras.q_tfidf_topk, llm_extras._TFIDF_ORACLE),
     # -- TPC-H-style SQL parity flagships (q5+q6 melted: r3 window repack)
-    add(
-        "tpch_q1_pricing_summary",
-        catalog.q_tpch_q1_pricing_summary,
-        catalog._ORACLES["tpch_q1_pricing_summary"],
-    )
-    add("tpch_q3_shipping", catalog.q_tpch_q3_shipping, catalog._ORACLES["tpch_q3_shipping"])
-    add("tpch_q5_q6_suite", q_tpch_q5_q6_suite, _TPCH_Q5_Q6_ORACLE)
-    add("w7_ranking_suite", catalog.q_w7_ranking_suite, catalog._ORACLES["w7_ranking_suite"])
+    ("tpch_q1_pricing_summary", catalog.q_tpch_q1_pricing_summary,
+     _O["tpch_q1_pricing_summary"]),
+    ("tpch_q3_shipping", catalog.q_tpch_q3_shipping, _O["tpch_q3_shipping"]),
+    ("tpch_q5_q6_suite", *union_gate(
+        ("q5", catalog.q_tpch_q5_local_supplier, _O["tpch_q5_local_supplier"],
+         ["n_name AS k", "revenue AS v", "CAST(-1 AS BIGINT) AS n"]),
+        ("q6", catalog.q_tpch_q6_forecast, _O["tpch_q6_forecast"],
+         ["'forecast' AS k", "revenue AS v", "n_rows AS n"]),
+    )),
+    ("w7_ranking_suite", catalog.q_w7_ranking_suite, _O["w7_ranking_suite"]),
+    # -- beyond-reference agg extras, one oracled suite. The fuzzy InDel tier
+    # is not a gate (no SQL mirror by nature): it stays a library operator,
+    # DP-oracle-pinned by tests/test_fuzzy_indel.py, and its
+    # native-expression sibling j2_fuzzy_topk is oracled above
+    ("agg_extras_suite", q_agg_extras_suite, _agg_extras_oracle()),
+]
 
-    # -- beyond-reference agg extras, melted into ONE oracled suite so the
-    # registry is 100% inside the driver's verify window (r2 VERDICT #8).
-    # The A11 HLL entry became a checkable tolerance contract; the fuzzy
-    # InDel tier left the registry (no SQL mirror by nature — it remains a
-    # library operator, DP-oracle-pinned by tests/test_fuzzy_indel.py, and
-    # its native-expression sibling j2_fuzzy_topk stays oracled above).
-    add("agg_extras_suite", q_agg_extras_suite, _agg_extras_oracle())
-    return q, o
+
+def queries() -> dict[str, Plan]:
+    """One entry per gate, in verification order. Each callable takes
+    (spark, sf_dir) -> DataFrame; computed columns are aliased identically
+    to oracle_sql()."""
+    return {name: plan for name, plan, _ in GATES}
+
+
+def oracle_sql() -> dict[str, str]:
+    """The DuckDB oracle of every gate, keyed like queries()."""
+    return {name: sql for name, _, sql in GATES}

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.lineage import literal_frame
 from ..schema import TRANSCRIPTS
 
 _CORRUPT = "_corrupt_record"
@@ -62,7 +63,9 @@ def read_transcripts(
     loudly on schema mismatch instead)."""
     if format == "parquet":
         df = spark.read.schema(TRANSCRIPTS).parquet(path)
-        return df, spark.createDataFrame([], "raw_line string")
+        # built on the JVM: createDataFrame over no rows would still start a
+        # Python worker when the caller counts it
+        return df, literal_frame(spark, "raw_line string")
     if format == "json":
         df = (
             spark.read.schema(_WITH_CORRUPT)

@@ -58,6 +58,22 @@ def test_json_corrupt_lines_quarantined(spark, tmp_path):
     assert good.where(F.col("conv_id").isNull()).count() == 0
 
 
+def test_parquet_quarantine_is_empty_without_a_python_worker(spark, corpus, tmp_path, capsys):
+    """Parquet has no corrupt lines, and saying so must not start a Python
+    worker: ingest_job counts the quarantine frame on every parquet run, and
+    a Python-RDD scan (ExistingRDD) costs ~1.3 s on a fresh context."""
+    path = str(tmp_path / "pq")
+    write_transcripts(corpus, path, "parquet")
+    _, quarantine = read_transcripts(spark, path, "parquet")
+    assert [(f.name, f.dataType.simpleString()) for f in quarantine.schema] == [
+        ("raw_line", "string")
+    ]
+    assert quarantine.count() == 0
+    capsys.readouterr()
+    quarantine.explain()
+    assert "ExistingRDD" not in capsys.readouterr().out
+
+
 def test_unknown_format_rejected(spark):
     with pytest.raises(ValueError):
         read_transcripts(spark, "/tmp/x", "xlsx")
